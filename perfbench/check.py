@@ -30,7 +30,9 @@ def check_etl(facts, res, inputs=None):
     expected = facts["expected_rows"]
     problems, failed, attempted, got, want = [], 0, 0, 0, 0
     checks = res["checks"]
+    attempted += 1
     if checks["ledger_errors"]:
+        failed += 1
         problems.append("the run's ledger has %d errors" % checks["ledger_errors"])
     for k, published in enumerate(checks["published"]):
         for name, exp in sorted(expected.items()):
@@ -51,12 +53,26 @@ def check_etl(facts, res, inputs=None):
             "recall": recall, "named": named}
 
 
+def must_keep(facts, ids):
+    """Ids every correct pass keeps: all docs less all but the smallest id
+    of each planted exact and near-dup cluster, and less the distant
+    variant pairs (checked apart, with a slack)."""
+    drop = {i for cl in facts["exact_clusters"] + facts["near_clusters"]
+            for i in cl if i != min(cl)}
+    drop |= {i for pair in facts["far_pairs"] for i in pair}
+    return set(ids) - drop
+
+
 def check_corpus(facts, res, inputs):
     """Per pass: the split holds exactly the survivors; each planted exact
     cluster keeps exactly one member, its smallest id; no two kept docs
-    share a text. Near-dup recall = planted pairs found / planted."""
+    share a text; no doc that is not a planted duplicate is dropped, and
+    at most FAR_SLACK of the distant variant pairs lose a member.
+    Near-dup recall = planted pairs found / planted."""
     texts = dict(zip(*[c.to_pylist() for c in pq.read_table(
         os.path.join(inputs, "corpus.parquet"), columns=["doc_id", "text"]).columns]))
+    keep_all = must_keep(facts, texts)
+    far_slack = int(FAR_SLACK * len(facts["far_pairs"]))
     planted = {tuple(p) for p in facts["near_pairs"]}
     problems, failed, recalls = [], 0, []
     passes = res["checks"]["passes"]
@@ -75,6 +91,12 @@ def check_corpus(facts, res, inputs):
             if members != [min(cl)]:
                 bad.append("exact cluster %s keeps %s" % (cl[:3], members[:3]))
                 break
+        lost = sorted(keep_all - keep)
+        if lost:
+            bad.append("%d docs that are not duplicates dropped, e.g. %s" % (len(lost), lost[:5]))
+        far_lost = sum(1 for pair in facts["far_pairs"] if not set(pair) <= keep)
+        if far_lost > far_slack:
+            bad.append("%d distant variant pairs lost a member (slack %d)" % (far_lost, far_slack))
         found = {tuple(x) for x in p["pairs"]}
         recalls.append(len(planted & found) / len(planted) if planted else 1.0)
         if recalls[-1] < check_corpus.recall_floor:
@@ -91,6 +113,11 @@ def check_corpus(facts, res, inputs):
 
 
 check_corpus.recall_floor = 0.9
+# The distant variants sit at a true 3-shingle Jaccard of about 0.3-0.45,
+# below the program's 0.5 cut on the MinHash estimate (16 bands x 4 rows);
+# estimate noise lifts about one pair per corpus over it. A probe or a
+# threshold that over-matches loses far more.
+FAR_SLACK = 0.1
 
 
 def quantize(v):
@@ -110,9 +137,12 @@ def exact_top(vectors, live, qid, k=10):
 
 
 def check_index(facts, res, inputs):
-    """Per round: live counts equal base + folded - deleted for both
-    indexes; no deleted id is ever served; recall@10 of each serve
-    against exact brute force over the live set."""
+    """Per round: the band probe flags no document outside the planted
+    near-dups and misses at most a fifth of them; live counts equal base +
+    folded - deleted for both indexes, where the documents folded are the
+    batch less the planted near-dups the probe found; no deleted id is
+    ever served; recall@10 of each serve against exact brute force over
+    the live set."""
     vectors = np.load(os.path.join(inputs, "all_vectors.npy"))
     problems, failed, attempted, recalls = [], 0, 0, []
     rounds = facts["rounds"]
@@ -125,7 +155,16 @@ def check_index(facts, res, inputs):
             live |= set(spec["vec_ingest"])
             live -= set(spec["vec_delete"])
             deleted |= set(spec["vec_delete"])
-            band_live += got["admitted"] - len(spec["doc_delete"])
+            planted_docs = {d for d, _ in spec["doc_planted"]}
+            dups = set(got["dup_docs"])
+            band_live += spec["doc_batch"] - len(planted_docs & dups) - len(spec["doc_delete"])
+            attempted += 1
+            missed, extra = planted_docs - dups, sorted(dups - planted_docs)
+            if extra or len(missed) > len(planted_docs) // 5:
+                failed += 1
+                problems.append("iter %d round %d: probe missed %d of %d planted near-dups, "
+                                "flagged %d others %s" % (it, r, len(missed), len(planted_docs),
+                                                          len(extra), extra[:5]))
             if got["ann_live"] >= 0:  # counted at the end of each pass
                 attempted += 2
                 if got["ann_live"] != len(live) or got["ann_live"] != spec["live_vecs"]:
@@ -136,10 +175,6 @@ def check_index(facts, res, inputs):
                     failed += 1
                     problems.append("iter %d round %d: band live %d, want %d"
                                     % (it, r, got["band_live"], band_live))
-            missed = [d for d, _ in spec["doc_planted"] if d not in set(got["dup_docs"])]
-            if len(missed) > len(spec["doc_planted"]) // 5:
-                problems.append("iter %d round %d: probe missed %d planted near-dups"
-                                % (it, r, len(missed)))
             for qid, served in zip(spec["queries"], got["served"]):
                 attempted += 1
                 hit = deleted & set(served)

@@ -21,7 +21,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 # ---------------------------------------------------------------------------
-# etl_geo: a source set shaped like the reference's production run log
+# etl_geo: a chosen source set, one source per kind the pipeline reads
 # ---------------------------------------------------------------------------
 
 # A concave (L-shaped) AOI in EPSG:3006: the lower rectangle plus the
@@ -270,27 +270,40 @@ def _yaml(entries):
 
 
 # The source set's shape is fixed; the seed moves every coordinate and
-# attribute. Six sources, one per kind, with heavy-tailed sizes: the
-# reference's run had 53 sources, the largest 19,579 rows, and cost about
-# 1.3 s per source, so a run of that size cannot be repeated often enough
-# to measure.
+# attribute. The shape is chosen, not measured: the size ladder, which kind
+# gets which size and geometry, and the 50/45/5 inside/outside/straddle
+# split (which sets geo.clip_keep_ratio) are picked to give one source per
+# kind with heavy-tailed sizes and all three geometry types. All that is
+# known of the reference's production run is 53 sources, 529 s in total and
+# a largest table of 19,579 rows; a run of that size cannot be repeated
+# often enough to measure.
 ETL_SOURCES = [("rest", 2000, "mixed"), ("geojson", 933, "polygon"),
                ("shp_zip", 595, "mixed"), ("gpkg", 434, "line"),
                ("ogc", 339, "point"), ("http", 277, "mixed")]
 
 
+# The untimed warm-up set: the same kinds and geometry, a tenth the size.
+ETL_WARM_SHARE = 10
+
+
 def gen_etl(seed, root, http_base):
-    """The source set: heavy-tailed sizes, every kind, mixed geometry.
-    Writes sources.yaml, aoi.wkt and expected.json."""
+    """The chosen source set (ETL_SOURCES): heavy-tailed sizes, every
+    kind, mixed geometry. Writes sources.yaml, aoi.wkt and expected.json,
+    and warm.yaml: a small disjoint set of the same kinds for set-up."""
     rng = random.Random(seed)
-    expected, timed = {}, []
+    expected, timed, warm = {}, [], []
     for i, (kind, n, mix) in enumerate(ETL_SOURCES):
         name = "src_%02d_%s" % (i, kind)
         feats, keep = _features(rng, n, mix)
         timed.append(_write_source(root, name, kind, feats, http_base))
         expected[name] = keep
+    for i, (kind, n, mix) in enumerate(ETL_SOURCES):
+        feats, _ = _features(rng, n // ETL_WARM_SHARE, mix)
+        warm.append(_write_source(root, "warm_src_%02d_%s" % (i, kind), kind, feats, http_base))
     with open(os.path.join(root, "sources.yaml"), "w") as f:
         f.write(_yaml(timed))
+    with open(os.path.join(root, "warm.yaml"), "w") as f:
+        f.write(_yaml(warm))
     with open(os.path.join(root, "aoi.wkt"), "w") as f:
         f.write(AOI_WKT)
     facts = {"expected_rows": expected}
@@ -349,8 +362,8 @@ def _pii(rng):
 
 
 def _corpus(rng, nrng, vocabs, n_docs):
-    """n_docs texts with planted exact and near-dup clusters; returns
-    (texts, [("exact"|"near", [text indexes])])."""
+    """n_docs texts with planted exact and near-dup clusters and distant
+    variants; returns (texts, [("exact"|"near"|"far", [text indexes])])."""
     langs = list(STOPWORDS)
     ranks = np.arange(1, CORPUS_VOCAB + 1)
     zipf = 1.0 / ranks ** 1.07
@@ -397,13 +410,14 @@ def _corpus(rng, nrng, vocabs, n_docs):
     for b, k in zip(near_bases, near_copies):
         groups.append(("near", [b] + [variant(b, NEAR_EDIT) for _ in range(k)]))
     for b in far_bases:
-        variant(b, FAR_EDIT)
+        groups.append(("far", [b, variant(b, FAR_EDIT)]))
     return texts, groups
 
 
 def gen_corpus(seed, root):
-    """corpus.parquet (doc_id, text) plus planted.json: the exact-dup
-    clusters (id lists) and the planted near-dup (base, variant) pairs.
+    """corpus.parquet (doc_id, text) plus planted.json: the exact-dup and
+    near-dup clusters (id lists), the planted near-dup (base, variant)
+    pairs, and the (base, distant variant) pairs that are not duplicates.
     warm.parquet is a small disjoint corpus for the untimed warm-up."""
     rng = random.Random(seed)
     nrng = np.random.default_rng(seed)
@@ -418,11 +432,16 @@ def gen_corpus(seed, root):
     pq.write_table(pa.table({"doc_id": pa.array(range(len(warm)), pa.int64()),
                              "text": pa.array(warm)}),
                    os.path.join(root, "warm.parquet"))
+    def clusters(kind):
+        return [sorted(ids[m] for m in ms) for g, ms in groups if g == kind]
+
     facts = {
         "docs": len(texts),
-        "exact_clusters": [sorted(ids[m] for m in ms) for g, ms in groups if g == "exact"],
+        "exact_clusters": clusters("exact"),
+        "near_clusters": clusters("near"),
         "near_pairs": sorted([min(ids[ms[0]], ids[m]), max(ids[ms[0]], ids[m])]
                              for g, ms in groups if g == "near" for m in ms[1:]),
+        "far_pairs": clusters("far"),
     }
     _write_json(os.path.join(root, "planted.json"), facts)
     return facts

@@ -19,6 +19,7 @@ import http.server
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -119,10 +120,13 @@ def run_jvm(cp, workload, inputs, work, seconds, trace, spans):
     try:
         rc = proc.wait(timeout=JVM_TIMEOUT_S)
     except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
         log("workload timed out")
         sys.exit(1)
+    finally:
+        # also on a timeout or a signal: the JVM never outlives the launcher
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
     if rc != 0 or not os.path.exists(out):
         log("workload failed (exit %d)" % rc)
         sys.exit(1)
@@ -135,6 +139,9 @@ def median(xs):
 
 
 def main():
+    # a terminated launcher unwinds, so the JVM, the loopback server and
+    # the work directory are cleaned up
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(1))
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)

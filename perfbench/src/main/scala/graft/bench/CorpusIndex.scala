@@ -137,7 +137,7 @@ object CorpusIndex {
           sample("serve_ms", s * 1000)
           ids
         }
-        if (tr.enabled) tr.span("trace.inspect")(inspect(c, path, files, tombstones))
+        if (tr.enabled) c.untimed(tr.span("trace.inspect")(inspect(c, path, files, tombstones)))
         tr.window("compact") {
           tr.span("index.compact", rt)(Similarity.compactIvfCells(spark, path))
           tr.span("index.band_compact", rt)(Dedup.compactMinhashBandIndex(spark, prefix))
@@ -160,8 +160,8 @@ object CorpusIndex {
       corpusPasses += Map("survivors" -> survivors, "pairs" -> found.toSeq, "out" -> out.toString)
       val annLive = Similarity.ivfCellStats(spark, path).agg(sum("n_vecs")).as[Long].head()
       val bandLive = liveDocs(c, prefix)
-      rounds += Map("served" -> served, "dup_docs" -> dups, "admitted" -> (nDoc - dups.size),
-        "ann_live" -> annLive, "band_live" -> bandLive)
+      rounds += Map("served" -> served, "dup_docs" -> dups, "ann_live" -> annLive,
+        "band_live" -> bandLive)
       sample("bytes_per_item",
         (c.du(Paths.get(path)) + bandBytes(c, prefix)).toDouble / math.max(1L, annLive + bandLive))
     }

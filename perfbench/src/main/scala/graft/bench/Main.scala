@@ -21,17 +21,42 @@ final class Ctx(val spark: SparkSession, val tr: Trace, val inputs: Path,
     val work: Path, val seconds: Double, val sessionS: Double) {
   /** (start, end) epoch ms of every timed pass */
   val passes = mutable.ArrayBuffer[(Double, Double)]()
+  /** (start, end) epoch ms of [[untimed]] work inside the passes */
+  val gaps = mutable.ArrayBuffer[(Double, Double)]()
 
-  /** Time one pass of the workload; traced, its engine counters land in
-    * the "timed" window and it becomes a root span.
+  /** Time one pass of the workload, less its [[untimed]] gaps; traced,
+    * its engine counters land in the "timed" window and it becomes a
+    * root span.
     */
   def timed[T](req: String)(body: => T): (T, Double) = {
     val a = tr.nowMs
     val out = tr.window("timed")(tr.span("pass", req)(body))
     val b = tr.nowMs
     passes += ((a, b))
-    System.err.println(f"[perfbench] pass $req: ${(b - a) / 1000.0}%.2f s")
-    (out, (b - a) / 1000.0)
+    val secs = (b - a - gapMs(a, b)) / 1000.0
+    System.err.println(f"[perfbench] pass $req: $secs%.2f s")
+    (out, secs)
+  }
+
+  /** Benchmark-only work inside a pass (traced runs' inspections): its
+    * wall time, engine counters and stage skews are left out of the pass.
+    */
+  def untimed[T](body: => T): T = {
+    val a = tr.nowMs
+    val out = tr.excluded(body)
+    gaps += ((a, tr.nowMs))
+    out
+  }
+
+  private def gapMs(a: Double, b: Double): Double =
+    gaps.filter { case (s, _) => s >= a && s <= b }.map { case (s, e) => e - s }.sum
+
+  /** The timed intervals: every pass with its gaps cut out. */
+  def timedIntervals: Seq[(Double, Double)] = passes.toSeq.flatMap { case (a, b) =>
+    val cuts = gaps.filter { case (s, _) => s >= a && s <= b }.sortBy(_._1)
+    val starts = a +: cuts.map(_._2)
+    val ends = cuts.map(_._1) :+ b
+    starts.zip(ends)
   }
 
   /** `body`'s result and its wall seconds. */
@@ -150,19 +175,21 @@ object Main {
       "spark.spill_bytes" -> t.spillBytes / n,
       "spark.task_skew" -> c.tr.worstSkew("timed"),
       "catalyst.plan_ms" -> t.planMs / n,
-      "spark.driver_idle_s" -> c.tr.idleSeconds(c.passes.toSeq) / n,
-      "trace.run_s" -> c.passes.map { case (a, b) => (b - a) / 1000 }.sum / n,
+      "spark.driver_idle_s" -> c.tr.idleSeconds(c.timedIntervals) / n,
+      "trace.run_s" -> c.timedIntervals.map { case (a, b) => (b - a) / 1000 }.sum / n,
       "trace.overhead_s" -> c.tr.overheadNs / 1e9 / n,
       "trace.span_coverage" -> spanCoverage(c))
   }
 
-  /** Share of the timed passes' wall time that falls inside a layer span
-    * (a direct child of a pass).
+  /** Share of the timed passes' wall time (gaps cut out) that falls
+    * inside a layer span: a direct child of a pass that is not the
+    * benchmark's own ("trace.*").
     */
   def spanCoverage(c: Ctx): Double = {
     val passIds = c.tr.spans.filter(_.name == "pass").map(_.id).toSet
-    val inLayers = c.tr.spans.filter(s => passIds(s.parent)).map(s => s.end - s.start).sum
-    val wall = c.passes.map { case (a, b) => b - a }.sum
+    val inLayers = c.tr.spans.filter(s => passIds(s.parent) && !s.name.startsWith("trace."))
+      .map(s => s.end - s.start).sum
+    val wall = c.timedIntervals.map { case (a, b) => b - a }.sum
     if (wall <= 0) 0.0 else inLayers / wall
   }
 

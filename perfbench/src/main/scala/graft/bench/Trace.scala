@@ -139,6 +139,9 @@ final class Trace(val enabled: Boolean) {
   private var spark: SparkSession = _
   private val windows = mutable.Map[String, Counters.Snap]()
   private val skewRanges = mutable.Map[String, List[(Int, Int)]]()
+  /** counters moved by [[excluded]] work while each window is open */
+  private val openWindows = mutable.Map[String, Counters.Snap]()
+  private var excludedSkews: List[(Int, Int)] = Nil
   /** time the traced run spends in its own bookkeeping */
   var overheadNs = 0L
 
@@ -173,15 +176,41 @@ final class Trace(val enabled: Boolean) {
     s
   }
 
-  /** Run `body` and add the engine counters it moved to window `name`. */
+  /** Run `body` and add the engine counters it moved to window `name`,
+    * less what [[excluded]] work inside it moved. Windows of one name do
+    * not nest.
+    */
   def window[T](name: String)(body: => T): T =
     if (!enabled) body
     else {
       val before = drained()
-      val out = body
-      val after = drained()
-      windows(name) = windows.getOrElse(name, Counters.Zero) + (after - before)
-      skewRanges(name) = (before.skews, after.skews) :: skewRanges.getOrElse(name, Nil)
+      openWindows(name) = Counters.Zero
+      val out = try body finally {
+        val after = drained()
+        val skipped = openWindows.remove(name).getOrElse(Counters.Zero)
+        windows(name) = windows.getOrElse(name, Counters.Zero) + (after - before - skipped)
+        skewRanges(name) = (before.skews, after.skews) :: skewRanges.getOrElse(name, Nil)
+      }
+      out
+    }
+
+  /** Run the benchmark's own `body` (work the untraced run does not do)
+    * inside open windows without charging it to them: its counters and
+    * stage skews leave every open window, and its wall time counts as
+    * tracing overhead.
+    */
+  def excluded[T](body: => T): T =
+    if (!enabled) body
+    else {
+      val t = System.nanoTime()
+      val overheadBefore = overheadNs
+      val before = drained()
+      val out = try body finally {
+        val after = drained()
+        openWindows.keys.toList.foreach(w => openWindows(w) = openWindows(w) + (after - before))
+        excludedSkews = (before.skews, after.skews) :: excludedSkews
+        overheadNs = overheadBefore + (System.nanoTime() - t)
+      }
       out
     }
 
@@ -190,7 +219,9 @@ final class Trace(val enabled: Boolean) {
   /** Worst stage skew (max/median task time) inside window `name`. */
   def worstSkew(name: String): Double = {
     val all = Counters.synchronized(Counters.skews.toVector)
-    val in = skewRanges.getOrElse(name, Nil).flatMap { case (a, b) => all.slice(a, b) }
+    def skipped(i: Int) = excludedSkews.exists { case (a, b) => i >= a && i < b }
+    val in = skewRanges.getOrElse(name, Nil)
+      .flatMap { case (a, b) => (a until b).filterNot(skipped).map(all) }
     if (in.isEmpty) 0.0 else in.max
   }
 

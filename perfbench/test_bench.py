@@ -100,10 +100,16 @@ class EtlCheckerRejectsCorruption(Base):
         del res["checks"]["published"][0][sorted(self.facts["expected_rows"])[0]]
         self.assertEqual(check.check_etl(self.facts, res)["failed"], 1)
 
+    def test_ledger_errors_fail(self):
+        res = copy.deepcopy(self.res)
+        res["checks"]["ledger_errors"] = 2
+        self.assertEqual(check.check_etl(self.facts, res)["failed"], 1)
+
 
 class CorpusCheckerRejectsCorruption(Base):
     """A correct pass keeps the smallest id of every exact cluster and of
-    every near-dup cluster, and finds every planted near-dup pair."""
+    every near-dup cluster and every other doc, and finds every planted
+    near-dup pair."""
 
     def setUp(self):
         super().setUp()
@@ -111,10 +117,12 @@ class CorpusCheckerRejectsCorruption(Base):
         self.facts = gen.gen_corpus(4, self.inputs)
         ids = pq.read_table(os.path.join(self.inputs, "corpus.parquet"),
                             columns=["doc_id"]).column(0).to_pylist()
-        drop = {i for cl in self.facts["exact_clusters"] for i in cl if i != min(cl)}
-        drop |= {max(a, b) for a, b in self.facts["near_pairs"]} - {
-            min(a, b) for a, b in self.facts["near_pairs"]}
+        drop = {i for cl in self.facts["exact_clusters"] + self.facts["near_clusters"]
+                for i in cl if i != min(cl)}
         self.kept = sorted(set(ids) - drop)
+
+    def without(self, ids):
+        return sorted(set(self.kept) - set(ids))
 
     def result(self, kept, pairs):
         out = os.path.join(self.tmp, "split-%d" % len(os.listdir(self.tmp)))
@@ -147,6 +155,33 @@ class CorpusCheckerRejectsCorruption(Base):
         res["checks"]["passes"][0]["survivors"] += 1
         self.assertEqual(check.check_corpus(self.facts, res, self.inputs)["failed"], 1)
 
+    def test_dropped_non_duplicate_fails(self):
+        lone = min(check.must_keep(self.facts, self.kept))
+        v = check.check_corpus(self.facts, self.result(self.without([lone]),
+                                                       self.facts["near_pairs"]), self.inputs)
+        self.assertEqual(v["failed"], 1)
+
+    def test_dropped_near_cluster_representative_fails(self):
+        cl = self.facts["near_clusters"][0]
+        v = check.check_corpus(self.facts, self.result(self.without([min(cl)]),
+                                                       self.facts["near_pairs"]), self.inputs)
+        self.assertEqual(v["failed"], 1)
+
+    def test_distant_variants_within_slack_pass(self):
+        far = [max(p) for p in self.facts["far_pairs"]]
+        slack = int(check.FAR_SLACK * len(far))
+        self.assertGreater(slack, 0)
+        v = check.check_corpus(self.facts, self.result(self.without(far[:slack]),
+                                                       self.facts["near_pairs"]), self.inputs)
+        self.assertEqual((v["failed"], v["problems"]), (0, []))
+
+    def test_over_deduplicated_distant_variants_fail(self):
+        far = [max(p) for p in self.facts["far_pairs"]]
+        slack = int(check.FAR_SLACK * len(far))
+        v = check.check_corpus(self.facts, self.result(self.without(far[:slack + 1]),
+                                                       self.facts["near_pairs"]), self.inputs)
+        self.assertEqual(v["failed"], 1)
+
 
 class IndexCheckerRejectsCorruption(Base):
     """A correct round serves the exact top-10 of the live set and counts
@@ -164,10 +199,9 @@ class IndexCheckerRejectsCorruption(Base):
         for spec in self.facts["rounds"]:
             live = (live | set(spec["vec_ingest"])) - set(spec["vec_delete"])
             dups = [d for d, _ in spec["doc_planted"]]
-            admitted = spec["doc_batch"] - len(dups)
-            band += admitted - len(spec["doc_delete"])
+            band += spec["doc_batch"] - len(dups) - len(spec["doc_delete"])
             served = [sorted(check.exact_top(vectors, live, q)) for q in spec["queries"]]
-            rounds.append({"served": served, "dup_docs": dups, "admitted": admitted,
+            rounds.append({"served": served, "dup_docs": dups,
                            "ann_live": len(live), "band_live": band})
         self.res = {"samples": samples(serve_ms=[1.0]), "peak_rss_mb": 1.0,
                     "checks": {"iterations": [rounds]}}
@@ -181,6 +215,32 @@ class IndexCheckerRejectsCorruption(Base):
         gone = self.facts["rounds"][0]["vec_delete"][0]
         res["checks"]["iterations"][0][0]["served"][0][-1] = gone
         self.assertEqual(check.check_index(self.facts, res, self.inputs)["failed"], 1)
+
+    def test_dropped_planted_probe_hits_fail(self):
+        res = copy.deepcopy(self.res)
+        got = res["checks"]["iterations"][0][0]
+        got["dup_docs"] = got["dup_docs"][: len(got["dup_docs"]) // 2]
+        # the missed near-dups are folded in, so the live count is still right
+        for later in res["checks"]["iterations"][0]:
+            later["band_live"] += len(self.facts["rounds"][0]["doc_planted"]) - len(got["dup_docs"])
+        v = check.check_index(self.facts, res, self.inputs)
+        self.assertEqual(v["failed"], 1)
+        self.assertIn("probe missed", v["problems"][0])
+
+    def test_over_matching_probe_fails(self):
+        """A probe that flags documents that are not near-dups keeps them
+        out of the index: the probe check and the live count both fail."""
+        res = copy.deepcopy(self.res)
+        spec = self.facts["rounds"][0]
+        planted = {d for d, _ in spec["doc_planted"]}
+        batch = range(self.facts["doc_base"], self.facts["doc_base"] + spec["doc_batch"])
+        extra = [d for d in batch if d not in planted][:3]
+        got = res["checks"]["iterations"][0][0]
+        got["dup_docs"] = got["dup_docs"] + extra
+        for later in res["checks"]["iterations"][0]:
+            later["band_live"] -= len(extra)
+        self.assertEqual(check.check_index(self.facts, res, self.inputs)["failed"],
+                         1 + len(self.facts["rounds"]))
 
     def test_wrong_live_count_fails(self):
         res = copy.deepcopy(self.res)
