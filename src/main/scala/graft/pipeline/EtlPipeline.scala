@@ -15,11 +15,12 @@ import graft.sources.{GeoJsonSource, GpkgSource, PagedRestSource, ShpSource}
   * continue-on-failure ledger semantics (R3) and run summary (A1/A3).
   *
   * Execution model: the per-source LOOP is driver-side plan construction
-  * (as in the reference, pipeline.py:203-294) — each source's DATA work
-  * is a Spark job. Sources are independent, so at cluster scale the loop
-  * can submit jobs concurrently (Spark's scheduler replaces the broken
-  * ThreadPoolExecutor fan-out, SURVEY §2.8); sequential here keeps the
-  * declared-order naming semantics (§7.4) deterministic.
+  * (as in the reference, pipeline.py:203-294); each phase's DATA work is
+  * ONE Spark write, and the phase's ledger row count (T7) is an
+  * `Observation` on that same write — no phase re-reads what it just
+  * wrote. Sources run sequentially in declared order: that keeps the
+  * order-dependent fc naming (§7.4) deterministic, and two sources
+  * mapped to one published table publish in order.
   */
 class EtlPipeline( // extensible: override readSource to plug custom readers (S8)
     spark: SparkSession,
@@ -39,11 +40,6 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
   val ladder = new graft.util.Retry.DegradationLadder()
 
   def results: Seq[LedgerRow] = ledger.toSeq
-
-  def resultsDf: DataFrame = {
-    import spark.implicits._
-    ledger.toSeq.toDF()
-  }
 
   /** Summary counts per (phase, status) — run_summary.py:10-47. */
   def summary: Map[(String, String), Long] =
@@ -215,52 +211,31 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
     */
   def stageSource(source: Source): Option[String] = {
     if (!source.enabled) { record(source, "stage", "skip"); return None } // T1
-    var cached: DataFrame = null
     try {
-      // the ladder retries the READ under degraded configs (its
-      // concurrency/timeout knobs govern driver-side landing I/O); a
-      // deterministic failure exhausts the 3 levels and falls through to
-      // the continue-on-failure ledger below (recovery.py SKIP floor).
-      // Spark defers scan work until an action, so the read is FORCED
-      // here (cache + count): a real decode/read failure surfaces INSIDE
-      // the ladder — where it can escalate — not later in the table
-      // write; the staged write below then reads the cached data instead
-      // of re-decoding the source.
-      val (df0, lvl) = ladder.run() { _ =>
-        val d = readSource(source)
-        d.cache()
-        try { d.count(); d }
-        catch { case e: Throwable => d.unpersist(); throw e }
-      }
-      cached = df0
-      if (lvl > 0) record(source, "stage", "degraded", level = lvl.toLong)
-      // include-list semi-filter on the landed file stem (T5) — the stems
-      // are a handful of config strings: isin == broadcast by construction.
-      val df = source.includeStems match {
-        case Seq() => df0
-        case stems =>
-          val stemCol = lower(regexp_replace(
-            regexp_extract(col("_file"), "([^/]+)\\.[A-Za-z0-9]+$", 1), "^main\\.", ""))
-          df0.filter(stemCol.isin(stems.map(_.toLowerCase): _*))
-      }
+      // the name is reserved only once the stage succeeds, so a failed
+      // source does not push later ones onto a `_1` suffix
       val fcName = Names.ensureUniqueName(
-        Names.generateFcName(source.authority, source.name), usedNames)
-      val staged = df
-        .withColumn("source_id", lit(source.name))
-        .withColumn("authority", lit(source.authority))
-        .drop("_file")
+        Names.generateFcName(source.authority, source.name), usedNames.clone())
       spark.sql(s"CREATE DATABASE IF NOT EXISTS `$stagingDb`")
-      if (cfg.pinSchemas && spark.catalog.tableExists(s"`$stagingDb`.`$fcName`")) {
-        val existing = spark.table(s"`$stagingDb`.`$fcName`").schema
-          .map(f => (f.name, f.dataType)).toSeq
-        val incoming = staged.schema.map(f => (f.name, f.dataType)).toSeq
-        if (existing != incoming)
-          throw new IllegalStateException(
-            s"schema drift on $fcName: staged ${incoming.mkString(",")} vs pinned ${existing.mkString(",")}")
+      // the ladder retries read AND write under degraded configs (its
+      // concurrency/timeout knobs govern driver-side landing I/O): Spark
+      // defers scan work to the write, so a decode/read failure surfaces
+      // here, inside the ladder, where it can escalate. A deterministic
+      // failure exhausts the 3 levels and falls through to the
+      // continue-on-failure ledger below (recovery.py SKIP floor); schema
+      // drift is a config fault and fails once, unescalated.
+      val (n, lvl) = ladder.run(e => !e.isInstanceOf[EtlPipeline.SchemaDrift]) { _ =>
+        val staged = includeFilter(source, readSource(source))
+          .withColumn("source_id", lit(source.name))
+          .withColumn("authority", lit(source.authority))
+          .drop("_file")
+        if (cfg.pinSchemas) checkPinnedSchema(fcName, staged)
+        Cleanup.ensureWritable(spark, stagingDb, fcName)
+        Publish.countedWrite(staged)(
+          _.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$fcName`"))
       }
-      Cleanup.ensureWritable(spark, stagingDb, fcName)
-      staged.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$fcName`")
-      val n = spark.table(s"`$stagingDb`.`$fcName`").count() // T7 verification
+      usedNames += fcName
+      if (lvl > 0) record(source, "stage", "degraded", level = lvl.toLong)
       record(source, "stage", "done", fcName, n)
       Some(fcName)
     } catch {
@@ -268,10 +243,30 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
         record(source, "stage", "error", error = String.valueOf(e.getMessage))
         if (!cfg.continueOnFailure) throw e
         None
-    } finally {
-      if (cached != null) cached.unpersist()
     }
   }
+
+  /** Include-list semi-filter on the landed file stem (T5) — the stems
+    * are a handful of config strings: isin == broadcast by construction.
+    */
+  private def includeFilter(source: Source, df: DataFrame): DataFrame =
+    source.includeStems match {
+      case Seq() => df
+      case stems =>
+        val stemCol = lower(regexp_replace(
+          regexp_extract(col("_file"), "([^/]+)\\.[A-Za-z0-9]+$", 1), "^main\\.", ""))
+        df.filter(stemCol.isin(stems.map(_.toLowerCase): _*))
+    }
+
+  private def checkPinnedSchema(fcName: String, staged: DataFrame): Unit =
+    if (spark.catalog.tableExists(s"`$stagingDb`.`$fcName`")) {
+      val existing = spark.table(s"`$stagingDb`.`$fcName`").schema
+        .map(f => (f.name, f.dataType)).toSeq
+      val incoming = staged.schema.map(f => (f.name, f.dataType)).toSeq
+      if (existing != incoming)
+        throw new EtlPipeline.SchemaDrift(
+          s"schema drift on $fcName: staged ${incoming.mkString(",")} vs pinned ${existing.mkString(",")}")
+    }
 
   /** Geoprocess in place (G1+G2, pipeline.py:408-460): skip silently when
     * no AOI is configured — the reference logs and no-ops
@@ -294,14 +289,15 @@ class EtlPipeline( // extensible: override readSource to plug custom readers (S8
           GeoFunctions.clipProject(staged, Geometry.BBox(a, b, c, d), cfg.targetSrid)
       }
       // in-place replace (Delete + CopyFeatures, geoprocess.py:79-81):
-      // stage to temp then overwrite — Spark can't overwrite a table
-      // from a plan that reads the same table.
+      // Spark can't overwrite a table from a plan that reads it, so the
+      // clip is written once to a temp table that is then renamed over
+      // the staged one — a catalog + directory move, not a second copy.
       val tmp = s"${fcName}__gp_tmp"
-      clipped.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`")
-      spark.table(s"`$stagingDb`.`$tmp`").write.mode("overwrite")
-        .saveAsTable(s"`$stagingDb`.`$fcName`")
-      spark.sql(s"DROP TABLE `$stagingDb`.`$tmp`")
-      val n = spark.table(s"`$stagingDb`.`$fcName`").count()
+      Cleanup.ensureWritable(spark, stagingDb, tmp)
+      val n = Publish.countedWrite(clipped)(
+        _.write.mode("overwrite").saveAsTable(s"`$stagingDb`.`$tmp`"))
+      spark.sql(s"DROP TABLE `$stagingDb`.`$fcName`")
+      spark.sql(s"ALTER TABLE `$stagingDb`.`$tmp` RENAME TO `$stagingDb`.`$fcName`")
       record(source, "geoprocess", "done", fcName, n)
     } catch {
       case e: Exception =>
@@ -371,4 +367,9 @@ object EtlPipeline {
   final case class LedgerRow(
       source: String, authority: String, phase: String, status: String,
       table: String, rows: Long, error: String, level: Long = 0L)
+
+  /** A staged frame whose schema differs from the pinned table's: a
+    * config fault that no degraded retry can fix.
+    */
+  final class SchemaDrift(msg: String) extends IllegalStateException(msg)
 }

@@ -1,6 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.functions.{Naming => Names}
 
@@ -27,7 +31,11 @@ object Publish {
   def tableExists(spark: SparkSession, db: String, table: String): Boolean =
     spark.catalog.tableExists(s"`$db`.`$table`")
 
-  /** Returns rows written. Strategy ∈ {truncate_and_load, replace, append}. */
+  /** Returns the table's rows after the publish (GetCount verification,
+    * pipeline.py:640-647). Strategy ∈ {truncate_and_load, replace,
+    * append}: the first two count the write itself; append reports the
+    * table's total, so it reads the table back.
+    */
   def publish(
       spark: SparkSession,
       df: DataFrame,
@@ -44,19 +52,30 @@ object Publish {
         if (tableExists(spark, db, table)) {
           // TruncateTable + Append(NO_TEST) ≡ INSERT OVERWRITE by position
           // into the existing schema (pipeline.py:685-697).
-          df.write.mode("overwrite").insertInto(fqn)
+          countedWrite(df)(_.write.mode("overwrite").insertInto(fqn))
         } else {
-          df.write.saveAsTable(fqn) // create path (pipeline.py:729-745)
+          countedWrite(df)(_.write.saveAsTable(fqn)) // create path (pipeline.py:729-745)
         }
       case "replace" =>
         spark.sql(s"DROP TABLE IF EXISTS $fqn") // pipeline.py:698-716
-        df.write.saveAsTable(fqn)
+        countedWrite(df)(_.write.saveAsTable(fqn))
       case "append" =>
         df.write.mode("append").saveAsTable(fqn) // pipeline.py:717-725
+        spark.table(fqn).count()
       case other =>
         throw new IllegalArgumentException(s"unknown sde_load_strategy '$other'")
     }
-    spark.table(fqn).count() // GetCount verification (pipeline.py:640-647)
+  }
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted by an
+    * `Observation` on that same job (T7) rather than by re-reading the
+    * table. The metrics are posted as the write finishes; the bounded
+    * wait only turns a lost notification into an error, not a hang.
+    */
+  private[pipeline] def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = new Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    Await.result(obs.future, 5.minutes).getLong(0)
   }
 
   /** Publish a feature frame as a `graft-rest` applyEdits session (the

@@ -55,8 +55,9 @@ object GeoJsonSource {
       .option("multiLine", "true")
       .json(paths: _*)
       .withColumn("_file", input_file_name())
+    // an empty collection (or page) yields no rows, not one null feature
     val exploded = raw
-      .select(col("_file"), col("crs"), posexplode_outer(col("features")))
+      .select(col("_file"), col("crs"), posexplode(col("features")))
       .withColumnRenamed("pos", "feature_id")
       .select(
         col("_file"),
@@ -72,12 +73,4 @@ object GeoJsonSource {
       .drop("geometry_json", "crs")
     GeoFunctions.withBboxColumns(withGeom)
   }
-
-  /** Promote selected properties to typed top-level columns (the
-    * normalize step of SURVEY §1.4: open map → pinned columns).
-    */
-  def promoteProperties(df: DataFrame, fields: Map[String, DataType]): DataFrame =
-    fields.foldLeft(df) { case (acc, (name, dt)) =>
-      acc.withColumn(name, col("properties").getItem(name).cast(dt))
-    }
 }

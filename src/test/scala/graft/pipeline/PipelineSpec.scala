@@ -501,4 +501,116 @@ class PipelineSpec extends AnyFunSuite {
       s"config error must name the source and field: ${e.getMessage}")
     intercept[IllegalArgumentException] { pipe.discoveryTtl(src(Some(3600.5))) }
   }
+
+  private def tableRows(db: String, table: String): Long =
+    spark.table(s"`$db`.`$table`").count()
+
+  test("ledger rows equal the written tables for every phase and strategy, 0-row sources included") {
+    // one feature, far outside the AOI
+    val outside = Files.createTempFile("graft_outside", ".geojson")
+    Files.write(outside, ("""{ "type": "FeatureCollection", "features": [""" +
+      """{"type": "Feature", "properties": {"id": 9},""" +
+      """ "geometry": {"type": "Point", "coordinates": [30.0, 65.0]}}]}""").getBytes)
+    val mm = new MappingManager(Seq.empty)
+    Seq("truncate_and_load", "replace", "append").foreach { strategy =>
+      val cfg = GlobalConfig(aoi = Some((17.9, 59.2, 18.2, 59.5)), targetSrid = 3006,
+        sdeLoadStrategy = strategy)
+      val db = s"staging_counts_$strategy"
+      val pipe = new EtlPipeline(spark, cfg, stagingDb = db)
+      val srcs = Seq(
+        Source(name = s"Counted Sample $strategy", authority = "CNT", sourceType = "file",
+          url = s"$res/sample.geojson"),
+        Source(name = s"Counted Outside $strategy", authority = "CNT", sourceType = "file",
+          url = outside.toString),
+        Source(name = s"Counted Empty $strategy", authority = "CNT", sourceType = "file",
+          url = s"$res/empty.geojson"))
+      srcs.foreach { s =>
+        def last(phase: String) = pipe.results.filter(r => r.source == s.name && r.phase == phase).last
+        val fc = pipe.stageSource(s).get
+        assert(last("stage").rows == tableRows(db, fc), s"${s.name} stage")
+        pipe.geoprocess(s, fc)
+        assert(last("geoprocess").status == "done", last("geoprocess").error)
+        assert(last("geoprocess").rows == tableRows(db, fc), s"${s.name} geoprocess")
+        pipe.publishTable(s, fc)
+        val pub = last("publish")
+        assert(pub.status == "done", pub.error)
+        val m = mm.resolve(s, fc)
+        val published = tableRows(Publish.datasetDb(m.sdeDataset),
+          graft.functions.Naming.sanitizeSdeName(m.sdeFc).toLowerCase)
+        assert(pub.rows == published, s"${s.name} publish ($strategy)")
+      }
+      def rows(name: String, phase: String) =
+        pipe.results.filter(r => r.source.startsWith(name) && r.phase == phase).map(_.rows)
+      assert(rows("Counted Sample", "stage") == Seq(2L))
+      assert(rows("Counted Sample", "geoprocess") == Seq(2L))
+      // wholly outside the AOI: stages a row, clips to 0
+      assert(rows("Counted Outside", "stage") == Seq(1L))
+      assert(rows("Counted Outside", "geoprocess") == Seq(0L))
+      assert(rows("Counted Outside", "publish") == Seq(0L))
+      // an empty collection stages, clips and publishes 0 rows
+      assert(rows("Counted Empty", "stage") ++ rows("Counted Empty", "geoprocess") ++
+        rows("Counted Empty", "publish") == Seq(0L, 0L, 0L))
+    }
+  }
+
+  test("geoprocess overwrites an orphaned temp-table directory a dead run left behind") {
+    val db = "staging_gp_orphan"
+    val pipe = new EtlPipeline(spark,
+      GlobalConfig(aoi = Some((17.9, 59.2, 18.2, 59.5)), targetSrid = 3006), stagingDb = db)
+    val fc = pipe.stageSource(sources.head).get
+    // the catalog of a fresh JVM no longer knows the temp table, but its
+    // warehouse directory is still there
+    val orphan = java.nio.file.Paths.get(
+      new java.net.URI(spark.catalog.getDatabase(db).locationUri)).resolve(s"${fc}__gp_tmp")
+    Files.createDirectories(orphan)
+    Files.write(orphan.resolve("part-00000-orphan.parquet"), "junk".getBytes)
+    assert(!spark.catalog.tableExists(s"`$db`.`${fc}__gp_tmp`"))
+    pipe.geoprocess(sources.head, fc)
+    val gp = pipe.results.filter(_.phase == "geoprocess").last
+    assert(gp.status == "done", gp.error)
+    assert(gp.rows == 2L && tableRows(db, fc) == 2L)
+    assert(!spark.catalog.tableExists(s"`$db`.`${fc}__gp_tmp`"))
+  }
+
+  test("run over one GeoJSON source with an AOI takes one Spark job per phase and caches nothing") {
+    val group = s"pipeline-jobs-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group`  => jobs.add(js.jobId)
+          case `marker` => markerSeen.countDown()
+          case _        =>
+        }
+    }
+    val pipe = new EtlPipeline(spark,
+      GlobalConfig(aoi = Some((17.9, 59.2, 18.2, 59.5)), targetSrid = 3006,
+        sdeLoadStrategy = "truncate_and_load"),
+      stagingDb = "staging_jobs")
+    val src = Source(name = "Job Count", authority = "JOB", sourceType = "file",
+      url = s"$res/sample.geojson")
+    spark.catalog.clearCache()
+    spark.sparkContext.addSparkListener(l)
+    val ledger = try {
+      spark.sparkContext.setJobGroup(group, "pipeline run")
+      val out = pipe.run(Seq(src))
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job of the run has been seen
+      spark.sparkContext.setJobGroup(marker, "listener bus marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    assert(ledger.map(r => (r.phase, r.status, r.rows)) ==
+      Seq(("stage", "done", 2L), ("geoprocess", "done", 2L), ("publish", "done", 2L)))
+    // stage write, clip write, publish write — no re-read counts them
+    assert(jobs.size == 3, s"expected 3 jobs, ran ${jobs.size}")
+    assert(org.apache.spark.sql.GraftColumnBridge.sqlCacheIsEmpty(spark),
+      "the run must leave the SQL cache empty")
+  }
 }
